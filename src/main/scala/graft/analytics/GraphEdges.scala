@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *
   * Returns a MATERIALIZED (persisted, computed) relation (src, dst) —
   * callers either unpersist it when done or rely on the library cache
-  * contract (`Caching.withCaches` / the harness's per-query
+  * contract (`graft.Caching.withCaches` / the harness's per-query
   * clearCache).
   */
 object GraphEdges {

@@ -64,7 +64,7 @@ object GraphStats {
     // the result is LAZY — the final round's cache must stay alive until
     // the caller consumes it (unpersisting here would force a full
     // uncached ~2^rounds recompute: measured 45 s vs 6 s at sf0.1); the
-    // harness's per-query clearCache / Caching.withCaches releases it
+    // harness's per-query clearCache / graft.Caching.withCaches releases it
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 

@@ -224,8 +224,9 @@ object CosinePairs {
   }
 
   /** L2-normalized micro-unit TF-IDF features (doc_id, hv, wn) — the
-    * shared first stage of [[cosinePairs]] and the dev profiler
-    * (`dev.ProfileCosine` MUST build on this, not a copy). Persisted;
+    * shared first stage of [[cosinePairs]]; a stage profile must build
+    * on this, not a copy (the stage measurements behind the current
+    * verify design are in commits 3c7f85e and 2cf3e72). Persisted;
     * release via the library cache contract.
     */
   private[graft] def features(documents: DataFrame): DataFrame = {

@@ -28,7 +28,7 @@ import graft.text.TextOps
   * both join sides reference it — the result is lazy, so the operator
   * itself cannot know when it is safe to unpersist. After consuming the
   * returned DataFrame (collect/write), the caller releases the cache —
-  * structurally with [[graft.operators.Caching.withCaches]] (unpersists
+  * structurally with [[graft.Caching.withCaches]] (unpersists
   * on scope exit), or by hand with `spark.catalog.clearCache()` (what
   * Bench/Verify do between queries). In a long-lived session, skipping
   * this accumulates cached blocks until executor storage evicts them

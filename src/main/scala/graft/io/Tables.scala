@@ -41,7 +41,9 @@ object Tables {
     * Catalyst prunes the parquet scan to just the needed columns.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
+
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")
@@ -84,6 +86,21 @@ object Tables {
       case _ => raw
     }
   }
+
+  /** Scan split counts of the two CPU-spread fixture tables, one
+    * [[graft.SessionMemo]] each: the split count is a property of the
+    * file layout + the session's read conf, not of the consuming query,
+    * but reading it off `df.rdd` forces full physical planning + RDD
+    * lineage construction — a measurable per-call driver cost when every
+    * documents/embeddings load probes it (round-9 advice finding). The
+    * memo re-probes when the table's files change.
+    */
+  private val scanSplits: Map[String, graft.SessionMemo[Int]] =
+    Seq("documents", "embeddings").map(t =>
+      t -> graft.SessionMemo(s"$t splits", Seq(t)) { (s, d) =>
+        table(s, d, t).rdd.getNumPartitions
+      }).toMap
+
   /** documents/embeddings feed CPU-heavy PER-ROW stages (tokenization,
     * shingle/md5 chains, winnowing folds, codecs, vector arithmetic)
     * whose parallelism is otherwise capped by the SCAN's split count —
@@ -97,62 +114,21 @@ object Tables {
     * splits and this is a no-op — the condition, not the repartition,
     * is the contract.
     */
-  /** Memoized scan split counts, keyed by (sessionUUID, path): the split
-    * count is a property of the file layout + the session's read conf,
-    * not of the consuming query, but reading it off `df.rdd` forces full
-    * physical planning + RDD lineage construction — a measurable
-    * per-call driver cost when every documents/embeddings load probes it
-    * (round-9 advice finding). First call per (session, path) pays the
-    * probe; the rest read the cache. Keys are (sessionUUID, path)
-    * STRINGS, not the session object, so stopped sessions are never
-    * pinned — and unlike an identity hash (which the JVM can reuse after
-    * a stopped session is GC'd) the UUID never aliases two sessions, so
-    * a new session with different read conf can't inherit a stale split
-    * count (round-10 advice finding). The residual entries are two boxed
-    * values per (session, fixture table) — bounded noise. Known, accepted staleness: rewriting the parquet
-    * at a memoized path within one session keeps the old split count
-    * (the driver fixtures are immutable; a rewriting caller should use a
-    * fresh session or the uncached overload).
-    */
-  private val scanSplits =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private[graft] def cpuSpread(df: DataFrame, key: String): DataFrame =
+    cpuSpread(df, key, df.rdd.getNumPartitions)
 
-  /** Stable per-session key for the split-count memo. Classic sessions
-    * carry a true UUID (`sessionUUID` — Scala-private[sql] but
-    * bytecode-public, hence the reflective read); any runtime without it
-    * falls back to the identity hash (same no-pinning property, with the
-    * documented reuse caveat — acceptable because such runtimes don't
-    * share this JVM-local memo across session restarts in practice).
-    */
-  private def sessionUuid(spark: SparkSession): String =
-    try spark.getClass.getMethod("sessionUUID").invoke(spark).toString
-    catch { case _: ReflectiveOperationException | _: ClassCastException =>
-      System.identityHashCode(spark).toHexString }
-
-  /** `cacheKey = null` (caller-built relations whose split count is a
-    * property of the upstream plan, not a stable file layout) probes on
-    * every call; a non-null key memoizes the probe per session.
-    */
-  private[graft] def cpuSpread(df: DataFrame, key: String,
-                               cacheKey: String = null): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
-    val splits =
-      if (cacheKey == null) df.rdd.getNumPartitions
-      // sessionUUID, not the session object (no pinning of stopped
-      // sessions) and not an identity hash (reusable after GC — a fresh
-      // session could silently inherit a stale split count)
-      else scanSplits.computeIfAbsent(
-        s"${sessionUuid(spark)}:$cacheKey",
-        _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue()
+  private def cpuSpread(df: DataFrame, key: String, splits: Int): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     if (splits >= n) df
     else df.repartition(n, org.apache.spark.sql.functions.col(key))
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame  =
-    cpuSpread(table(spark, dir, "documents"), "doc_id", s"$dir/documents.parquet")
+    cpuSpread(table(spark, dir, "documents"), "doc_id",
+      scanSplits("documents")(spark, dir))
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    cpuSpread(table(spark, dir, "embeddings"), "vec_id", s"$dir/embeddings.parquet")
+    cpuSpread(table(spark, dir, "embeddings"), "vec_id",
+      scanSplits("embeddings")(spark, dir))
 
   /** CSV source with an explicit schema. Schema inference is deliberately
     * not offered: at 100 TB inference costs an extra full scan and can

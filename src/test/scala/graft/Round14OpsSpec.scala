@@ -13,6 +13,49 @@ class Round14OpsSpec extends AnyFunSuite {
   test("memoOwners declares only existing queries") {
     val unknown = SparkEntry.memoOwners -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"memoOwners not in queries: $unknown")
+    // derived from the memo reader declarations; value_charged depends
+    // on exactly this set
+    assert(SparkEntry.memoOwners === Set(
+      "dedup_best_survivors", "q_betweenness", "q_degree_assort", "q_ktruss",
+      "embed_dbscan", "pipeline_corpus_prep", "text_nb_classify",
+      "q_hybrid_rrf", "q_label_prop", "text_maxmatch_encode", "q_graph_spid",
+      "q_item_cf", "q_hits", "q_pagerank"))
+  }
+
+  test("memo reader declarations match the reads query construction makes") {
+    // a session of its own, so every memo builds (and logs its own
+    // reads) inside the first query that reaches it
+    val s = spark.newSession()
+    val memos = SparkEntry.sessionMemos
+    val names = memos.map(_._1.name).toSet
+    val declared = memos.flatMap { case (m, qs) => qs.map(_ -> m.name) }
+      .groupBy(_._1).map { case (q, ms) => q -> ms.map(_._2).toSet }
+    val builtOn = memos.map { case (m, _) => m.name -> m.builtOn.map(_.name).toSet }
+    val seenBuilds = scala.collection.mutable.Map.empty[String, Set[String]]
+    for (q <- declared.keys.toSeq.sorted) {
+      val reads = SessionMemo.readsDuring(SparkEntry.queries(q)(s, TestSpark.sfDir))
+        .filter { case (_, m) => names(m) }
+      assert(reads.collect { case ("", m) => m } === declared(q),
+        s"$q: memos read at construction vs declared readers")
+      reads.collect { case (r, m) if r.nonEmpty => r -> m }.groupBy(_._1)
+        .foreach { case (r, ms) => seenBuilds(r) = ms.map(_._2) }
+    }
+    // every memo was built in this session; each build read exactly the
+    // memos it declares it is built on
+    for ((m, ups) <- builtOn)
+      assert(seenBuilds.getOrElse(m, Set.empty) === ups, s"$m: builtOn vs reads")
+  }
+
+  test("coBought keeps origin-estimate stats; coBoughtSym carries accurate ones") {
+    // only the persisted checkpointedAccurate path supplies a row count
+    def rowCount(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.rowCount
+    val dir = TestSpark.sfDir
+    assert(rowCount(SparkEntry.coBought(spark, dir)).isEmpty,
+      "coBought must stay a plain checkpoint (round-14 triangle A/B)")
+    val sym = SparkEntry.coBoughtSym(spark, dir)
+    assert(rowCount(sym) === Some(BigInt(sym.count())),
+      "coBoughtSym must carry accurate stats (frontier 2-task collapse)")
   }
 
   test("warmup-only seed child reports positive calibration readings") {
